@@ -173,8 +173,13 @@ final class Index(spark: SparkSession, underlying: VectorIndex,
     * when they exist (post-filtering would silently under-fill).
     * Relationally the filter lands in the index scan — pushed to
     * parquet, pruning partitions when the index is laid out on the
-    * filter column. A non-exact index routes through its persisted ANN
-    * layout ([[graft.index.IndexKinds]]) — same call, pruned plan. */
+    * filter column. An `"ivf"` index runs its single-question plan
+    * ([[graft.index.IndexKinds.searchIvfOne]]): the driver probes the
+    * cached centroids, one scan of the probed cells refines to the
+    * top-k and carries the requested columns — no join. Every other
+    * non-exact kind routes a one-row batch through its persisted ANN
+    * layout ([[graft.index.IndexKinds]]) and joins the requested
+    * columns back by pk — same call, pruned plan. */
   def similaritySearch(columns: Seq[String], queryVector: Seq[Float],
       numResults: Int, filters: Map[String, Any]): DataFrame =
     if (IndexKinds.isMultiVector(meta.kind))
@@ -188,6 +193,9 @@ final class Index(spark: SparkSession, underlying: VectorIndex,
         meta.vecCol, meta.pkCol, normalized(queryVector), numResults,
         Metric.Cosine, columns)
         .drop("rank")
+    else if (meta.kind == IndexKinds.Ivf)
+      IndexKinds.searchIvfOne(spark, meta, queryVector, columns,
+        numResults, filterPred(filters))
     else {
       // route through the kind's layout; join the requested columns
       // back by pk (the ranked set is ≤ numResults rows — broadcast)

@@ -141,9 +141,11 @@ object IndexKinds {
 
   /** The layout's own raw-corpus relation — the graph walk's scoring
     * side, the hybrid vector leg, and the column join-back of
-    * `similaritySearch` all read it. No kind duplicates the corpus:
-    * the IVF layout and the sign-LSH `_docs` table ARE the corpus;
-    * graph and hybrid persist a `_corpus` side table at build. */
+    * `similaritySearch` on the kinds without a single-question plan all
+    * read it (the `"ivf"` kind carries its columns through the refine
+    * instead, [[searchIvfOne]]). No kind duplicates the corpus: the IVF
+    * layout and the sign-LSH `_docs` table ARE the corpus; graph and
+    * hybrid persist a `_corpus` side table at build. */
   def corpusTable(spark: SparkSession, meta: IndexMeta): DataFrame =
     meta.kind match {
       case Ivf =>
@@ -354,6 +356,17 @@ object IndexKinds {
     case other =>
       throw new IllegalArgumentException(s"unknown index kind '$other'")
   }
+
+  /** One query vector against an `"ivf"` index: driver-side probe,
+    * cell-pruned refine, `columns :+ "score"` in rank order
+    * ([[Ann.queryPersistedIvfOne]]). Same answers as [[search]] on a
+    * one-row query joined back to [[corpusTable]]. */
+  def searchIvfOne(spark: SparkSession, meta: IndexMeta,
+      query: Seq[Float], columns: Seq[String], k: Int,
+      rowFilter: Option[Column]): DataFrame =
+    Ann.queryPersistedIvfOne(spark, Ann.PersistedIvf(layoutPath(meta)),
+      query, columns, meta.pkCol, meta.vecCol, k,
+      nProbe = opt(meta, "nProbe", 4), metricOf(meta), rowFilter)
 
   /** Apply a CDF batch to the kind's layout (the exact artifact is
     * synced separately by [[VectorIndex.sync]]). Each layout keeps its

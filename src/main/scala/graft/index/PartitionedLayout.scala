@@ -27,16 +27,20 @@ object PartitionedLayout {
     * SQ8 codes + vectors) pay max() instead of sum() of two
     * fixed-latency jobs per micro-batch. Safe whenever the two jobs
     * touch DISJOINT paths (Spark schedules concurrent jobs from
-    * separate threads freely); both are awaited, the first failure
-    * propagates. */
+    * separate threads freely). Both sides always run to the end before
+    * this returns or throws — a failed side never leaves the other
+    * writing unawaited, where a replay could race it — and then `a`'s
+    * failure, else `b`'s, propagates. */
   def inParallel(a: => Unit, b: => Unit): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val fa = Future(a)
     val fb = Future(b)
-    Await.result(fa, Duration.Inf)
-    Await.result(fb, Duration.Inf)
+    val ra = Await.ready(fa, Duration.Inf).value.get
+    val rb = Await.ready(fb, Duration.Inf).value.get
+    ra.get
+    rb.get
   }
 
   /** Inverse of Spark's partition-dir name escaping (%xx hex pairs —

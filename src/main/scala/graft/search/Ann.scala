@@ -1,12 +1,16 @@
 package graft.search
 
-import graft.functions.{Metric, VectorFunctions => VF}
+import graft.functions.{Metric, VectorDistance, VectorFunctions => VF}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Approximate nearest-neighbor retrieval — the open-primitive stand-in
   * for the managed service's HNSW (reference queries delegate ANN to
@@ -311,6 +315,56 @@ object Ann {
 
   final case class PersistedIvf(path: String)
 
+  /** A persisted layout's centroid table, held on the driver: the rows
+    * of `_centroids` with its schema, and each centroid as a literal for
+    * the driver-side probe. */
+  final class Centroids private[Ann] (schema: StructType, rows: Array[Row]) {
+    private val cells: Array[(Int, Literal)] = rows.map(r =>
+      r.getInt(0) -> Literal.create(r.get(1), schema(1).dataType))
+
+    /** The centroids as a local relation: no file read, no job. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, schema)
+
+    /** The `nProbe` cells nearest to `query`, in probe order — the
+      * batch probe's cell set: the same `VectorDistance(…, L2)`
+      * evaluation and the same `(distance, __cell)` ascending order
+      * under Spark's double comparison. */
+    def probe(query: Seq[Float], nProbe: Int): Seq[Int] = {
+      val q = Literal.create(query.toArray)
+      cells.map { case (cell, c) =>
+        (VectorDistance(q, c, Metric.L2).eval().asInstanceOf[Double], cell)
+      }.sortWith { case ((da, ca), (db, cb)) =>
+        val byDist = SQLOrderingUtil.compareDoubles(da, db)
+        byDist < 0 || (byDist == 0 && ca < cb)
+      }.take(nProbe).map(_._2).toSeq
+    }
+  }
+
+  private val centroidCache =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      (Seq[(String, Long, Long)], Centroids)]()
+
+  /** The centroids of the layout at `path`, read once per `_centroids`
+    * directory listing. The cache key is every listed file's (name,
+    * length, mtime): a rebuild writes new part files, so it always
+    * misses, and each layout path keeps only its latest entry. A hit
+    * costs one directory listing and opens no file. */
+  def loadCentroids(spark: SparkSession, path: String): Centroids = {
+    val dir = new org.apache.hadoop.fs.Path(path + "_centroids")
+    val key = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sorted.toSeq
+    Option(centroidCache.get(path)).filter(_._1 == key).map(_._2)
+      .getOrElse {
+        val t = spark.read.parquet(dir.toString)
+        val c = new Centroids(t.schema, t.collect())
+        centroidCache.put(path, key -> c)
+        c
+      }
+  }
+
   /** Query a persisted IVF index. The cell filter is a partition filter:
     * check `.explain` for `PartitionFilters: [__cell IN (...)]` with no
     * data-column filter — unprobed cells are never opened.
@@ -328,7 +382,7 @@ object Ann {
       corpusPkCol: String, corpusVecCol: String, k: Int, nProbe: Int,
       metric: Metric = Metric.Cosine,
       rowFilter: Option[Column] = None): DataFrame = {
-    val centroids = spark.read.parquet(idx.path + "_centroids")
+    val centroids = loadCentroids(spark, idx.path).frame(spark)
     val q = queries.select(col(queryIdCol).as("query_id"),
       col(queryVecCol).as("__qvec"))
     val probed = q.crossJoin(broadcast(centroids))
@@ -362,6 +416,28 @@ object Ann {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
+  /** One query vector against a persisted IVF layout — the
+    * single-question plan behind `Index.similaritySearch`. The probe
+    * runs on the driver over the cached centroids ([[Centroids.probe]],
+    * the same cells [[queryPersistedIvf]] probes); the refine is
+    * [[Knn.singleQuery]] over the cell-pruned layout scan: scan →
+    * codegen'd distance → `TakeOrderedAndProject`. The layout is the
+    * corpus, so the requested `columns` ride through the refine and no
+    * join brings them back. `rowFilter` has [[queryPersistedIvf]]'s
+    * PRE-rank semantics. Returns `columns :+ "score"` in rank order —
+    * the rows, scores and order of the batch path for the same query. */
+  def queryPersistedIvfOne(spark: SparkSession, idx: PersistedIvf,
+      query: Seq[Float], columns: Seq[String], corpusPkCol: String,
+      corpusVecCol: String, k: Int, nProbe: Int, metric: Metric,
+      rowFilter: Option[Column]): DataFrame = {
+    val cells = loadCentroids(spark, idx.path).probe(query, nProbe)
+    val pruned = spark.read.parquet(idx.path)
+      .filter(col("__cell").isin(cells: _*))
+    Knn.singleQuery(rowFilter.map(pruned.filter).getOrElse(pruned),
+      corpusVecCol, corpusPkCol, query, k, metric, columns)
+      .select((columns :+ "score").map(col): _*)
+  }
+
   /** Incremental maintenance of a [[persistIvf]] layout — FAISS's IVF
     * `add`/`remove` for the on-disk form. Centroids stay FROZEN (the
     * FAISS contract: adding vectors never re-centers; rebuild to
@@ -391,7 +467,7 @@ object Ann {
     val layout = spark.read.parquet(idx.path)
     val hasSub = layout.columns.contains("__subcell")
     val partCols = if (hasSub) Seq("__cell", "__subcell") else Seq("__cell")
-    val cents = spark.read.parquet(idx.path + "_centroids")
+    val cents = loadCentroids(spark, idx.path).frame(spark)
     val latest = ChangeLog.latestPerPk(changes, pkCol)
     val upserts = latest.filter(col("__op") =!= ChangeLog.OpDelete)
       .drop("__op", "__seq")

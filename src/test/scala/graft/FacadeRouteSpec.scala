@@ -234,6 +234,204 @@ class FacadeRouteSpec extends SparkSpec {
     assert(rows.select("vec_id").as[Long].collect().toSeq === want)
   }
 
+  /** The formulation the single-question ivf plan replaced: a one-row
+    * routed batch search joined back to the corpus table by pk. */
+  private def joinedBack(idx: Index, qv: Seq[Float], cols: Seq[String],
+      k: Int, filters: Map[String, Any] = Map.empty)
+      : org.apache.spark.sql.DataFrame =
+    idx.search(Seq(Tuple2(0L, qv)).toDF("__qid", "__qvec"), "__qid",
+        "__qvec", k, filters)
+      .join(IndexKinds.corpusTable(spark, idx.meta), Seq(idx.meta.pkCol))
+      .orderBy(col("rank").asc)
+      .select((cols :+ "score").map(col): _*)
+
+  /** Asserts single-question `similaritySearch` ≡ [[joinedBack]] for
+    * every query: same columns, same rows in the same order, scores
+    * equal as Doubles. Returns the per-query row counts. */
+  private def assertSameAsJoinedBack(idx: Index, qvs: Seq[Seq[Float]],
+      k: Int, filters: Map[String, Any] = Map.empty): Seq[Int] = {
+    val cols = Seq("vec_id", "label", "embedding")
+    qvs.map { qv =>
+      val got = idx.similaritySearch(cols, qv, k, filters)
+      val want = joinedBack(idx, qv, cols, k, filters)
+      assert(got.columns.toSeq === want.columns.toSeq)
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      // Row equality compares the Double scores exactly
+      if (g != w)
+        fail(s"single-question ivf plan diverged: (pk, score) " +
+          s"${g.map(r => (r.getLong(0), r.getDouble(3)))} vs " +
+          s"${w.map(r => (r.getLong(0), r.getDouble(3)))}")
+      g.size
+    }
+  }
+
+  private def queryVecs(n: Int): Seq[Seq[Float]] =
+    emb.filter($"vec_id" % 17 < 2).orderBy("vec_id").limit(n)
+      .select("embedding").as[Seq[Float]].collect().toSeq
+
+  test("single-question ivf similaritySearch equals the routed search " +
+      "joined back to the corpus: probes, filters, trained centroids") {
+    val qvs = queryVecs(24)
+    assert(qvs.size >= 20)
+    val idx = mkIndex("one_ivf", "ivf", Map("cells" -> "16", "nProbe" -> "4"))
+    assertSameAsJoinedBack(idx, qvs, 5)
+    // a filter that leaves the probed cells short of k matches: PRE-rank
+    // semantics under-fill on both formulations alike
+    val filled = assertSameAsJoinedBack(idx, qvs.take(6), 40,
+      Map("label" -> 3))
+    assert(filled.exists(_ < 40), s"filter should under-fill k: $filled")
+    val tr = mkIndex("one_ivf_tr", "ivf",
+      Map("cells" -> "8", "nProbe" -> "2", "trained" -> "true",
+        "iters" -> "2", "sampleN" -> "64"))
+    assertSameAsJoinedBack(tr, qvs, 5)
+  }
+
+  test("single-question ivf similaritySearch stays equal to the joined " +
+      "formulation across sync, optimize and a same-name rebuild") {
+    import graft.index.ChangeLog
+    import graft.search.Ann
+    val qvs = queryVecs(20)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_facade_one_ivf_life").toString
+    val vs = new VectorSearch(spark, root)
+    vs.createEndpoint("ep")
+    val idx = vs.createDeltaSyncIndex("ep", corpus, "life", "vec_id",
+      "embedding", 64, "ivf", Map("cells" -> "16", "nProbe" -> "4"))
+    assertSameAsJoinedBack(idx, qvs, 5)
+    // one batch that moves rows to other cells (their vector becomes a
+    // far-away row's), updates a label in place, deletes and inserts
+    val moved = corpus.filter($"vec_id".between(5, 14))
+      .join(corpus.filter($"vec_id".between(400, 409))
+        .select(($"vec_id" - 395).as("vec_id"),
+          $"embedding".as("far")), "vec_id")
+      .select($"vec_id", $"far".as("embedding"), $"label")
+    val relabelled = corpus.filter($"vec_id".between(20, 24))
+      .withColumn("label", $"label" + 100)
+    val changes = moved.union(relabelled)
+      .withColumn("__op", lit(ChangeLog.OpUpdate))
+      .union(corpus.filter($"vec_id".between(30, 39))
+        .withColumn("__op", lit(ChangeLog.OpDelete)))
+      .union(queries.withColumn("__op", lit(ChangeLog.OpInsert)))
+      .withColumn("__seq", lit(1L))
+    def cellsOfMoved(): Map[Long, Int] =
+      spark.read.parquet(IndexKinds.layoutPath(idx.meta))
+        .filter($"vec_id".between(5, 14)).select("vec_id", "__cell")
+        .as[(Long, Int)].collect().toMap
+    val cellsBefore = cellsOfMoved()
+    idx.sync(changes)
+    assert(cellsOfMoved().exists { case (pk, c) => cellsBefore(pk) != c },
+      "the batch must move some rows to another cell")
+    assertSameAsJoinedBack(idx, qvs, 5)
+    idx.optimize()
+    assertSameAsJoinedBack(idx, qvs, 5)
+    // drop and re-create under the same name over a different corpus:
+    // the probe must see the new centroids, not the cached old ones
+    val path = IndexKinds.layoutPath(idx.meta)
+    def onDisk(): Seq[(Int, Seq[Float])] =
+      spark.read.parquet(path + "_centroids").orderBy("__cell")
+        .as[(Int, Seq[Float])].collect().toSeq
+    val before = onDisk()
+    vs.deleteIndex("life")
+    val other = corpus.filter($"vec_id" % 3 =!= 0)
+      .select(($"vec_id" * 7 % 1000).as("vec_id"), $"embedding", $"label")
+    val again = vs.createDeltaSyncIndex("ep", other, "life", "vec_id",
+      "embedding", 64, "ivf", Map("cells" -> "16", "nProbe" -> "4"))
+    assert(IndexKinds.layoutPath(again.meta) === path)
+    assert(onDisk() !== before, "the rebuild must train other centroids")
+    val cached = Ann.loadCentroids(spark, path)
+      .frame(spark).orderBy("__cell").as[(Int, Seq[Float])].collect().toSeq
+    assert(cached === onDisk(), "the loader must serve the new centroids")
+    assertSameAsJoinedBack(again, qvs, 5)
+    // and it answers like a twin built over the same corpus at a path
+    // the cache has never seen
+    val vs2 = new VectorSearch(spark, java.nio.file.Files
+      .createTempDirectory("graft_facade_one_ivf_twin").toString)
+    vs2.createEndpoint("ep")
+    val twin = vs2.createDeltaSyncIndex("ep", other, "life", "vec_id",
+      "embedding", 64, "ivf", Map("cells" -> "16", "nProbe" -> "4"))
+    val cols = Seq("vec_id", "label", "embedding")
+    qvs.foreach { qv =>
+      assert(again.similaritySearch(cols, qv, 5).collect().toSeq ===
+        twin.similaritySearch(cols, qv, 5).collect().toSeq)
+    }
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by a
+    * listener. A fence job run afterwards flushes the listener bus, so
+    * every job of `body` has been seen when this returns. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val prop = "graft.test.jobs"
+    val tag = s"measure-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(prop)))
+          .foreach { t =>
+            if (t == tag) n.incrementAndGet()
+            else if (t == tag + ":fence") fence.countDown()
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      body
+      sc.setLocalProperty(prop, tag + ":fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
+  }
+
+  /** Jobs one warm single-question `similaritySearch(...).collect()`
+    * on an ivf index runs: the layout's parquet schema inference and
+    * the pruned scan → `TakeOrderedAndProject` itself. */
+  private val IvfOneQuestionJobs = 2
+
+  test("single-question ivf search: job budget, a cell-pruned plan " +
+      "with no join, and no _centroids read while the layout is unchanged") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    spark.sharedState.cacheManager.clearCache()
+    val idx = mkIndex("one_budget", "ivf",
+      Map("cells" -> "16", "nProbe" -> "4"))
+    val qv = queryVecs(1).head
+    val cols = Seq("vec_id", "label")
+    val first = idx.similaritySearch(cols, qv, 5).collect().toSeq
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      df = idx.similaritySearch(cols, qv, 5)
+      assert(df.collect().toSeq === first)
+    }
+    assert(jobs <= IvfOneQuestionJobs,
+      s"$jobs jobs for one question, budget $IvfOneQuestionJobs")
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("PartitionFilters: [__cell"),
+      s"the refine must prune cells at the listing:\n$plan")
+    val joins = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case j: BaseJoinExec => j
+    }
+    assert(joins.isEmpty, s"the single-question plan must not join:\n$plan")
+    // overwrite every _centroids file with garbage of the same length
+    // and mtime: the listing (the cache key) is unchanged, and any read
+    // of those files would now fail
+    val dir = new java.io.File(IndexKinds.layoutPath(idx.meta) + "_centroids")
+    val files = dir.listFiles().filter(f => f.isFile && f.length > 0)
+    assert(files.exists(_.getName.endsWith(".parquet")))
+    files.foreach { f =>
+      val mtime = f.lastModified()
+      java.nio.file.Files.write(f.toPath, Array.fill(f.length.toInt)(7.toByte))
+      assert(f.setLastModified(mtime))
+    }
+    assert(idx.similaritySearch(cols, qv, 5).collect().toSeq === first,
+      "a repeat with no layout change must not read _centroids")
+  }
+
   test("kind and options survive a catalog reopen (fresh session " +
       "object, same root)") {
     val root = java.nio.file.Files

@@ -622,6 +622,25 @@ class PersistedLayoutSpec extends SparkSpec {
     assert(files(s"$root/merged").map(_._2).sorted === total)
   }
 
+  test("inParallel awaits both sides before a failure propagates; " +
+      "a's failure wins when both fail") {
+    import graft.index.PartitionedLayout
+    @volatile var bDone = false
+    val e = intercept[IllegalStateException] {
+      PartitionedLayout.inParallel(
+        throw new IllegalStateException("a failed"),
+        { Thread.sleep(500); bDone = true })
+    }
+    assert(e.getMessage === "a failed")
+    assert(bDone, "b must have finished by the time inParallel throws")
+    val both = intercept[IllegalStateException] {
+      PartitionedLayout.inParallel(
+        { Thread.sleep(300); throw new IllegalStateException("a failed") },
+        throw new IllegalStateException("b failed"))
+    }
+    assert(both.getMessage === "a failed")
+  }
+
   test("Sq8.mergeShards: shared-grid shard encodes merge into a full " +
       "build; a mismatched grid is rejected") {
     import graft.search.Sq8
