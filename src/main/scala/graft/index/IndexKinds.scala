@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.functions.{Metric, VectorFunctions => VF}
+import graft.functions.Metric
 import graft.search.{Ann, GraphAnn, Hybrid, Knn, Plaid, Pq, Sq8}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -168,8 +168,16 @@ object IndexKinds {
     }
 
   /** Build the kind's persisted layout from the raw source (no-op for
-    * `"exact"` — the normalized artifact is the layout). */
+    * `"exact"` — the normalized artifact is the layout). Single-vector
+    * kinds index only the rows the exact artifact keeps
+    * ([[VectorIndex.validVector]]); plaid keeps its own bag rule. */
   def build(spark: SparkSession, meta: IndexMeta,
+      source: DataFrame): Unit =
+    buildValid(spark, meta,
+      if (isMultiVector(meta.kind)) source
+      else source.filter(VectorIndex.validVector(meta)))
+
+  private def buildValid(spark: SparkSession, meta: IndexMeta,
       source: DataFrame): Unit = meta.kind match {
     case Exact => ()
     case Ivf =>
@@ -370,8 +378,20 @@ object IndexKinds {
 
   /** Apply a CDF batch to the kind's layout (the exact artifact is
     * synced separately by [[VectorIndex.sync]]). Each layout keeps its
-    * own frozen-at-build training state per its documented contract. */
+    * own frozen-at-build training state per its documented contract.
+    * For single-vector kinds an upsert whose vector fails
+    * [[VectorIndex.validVector]] becomes a null-vector upsert, which
+    * every kind's sync removes — the row leaves the layout exactly as
+    * it leaves the exact artifact, and no kind sees a vector it cannot
+    * score. */
   def sync(spark: SparkSession, meta: IndexMeta,
+      changes: DataFrame): Unit =
+    syncValid(spark, meta,
+      if (isMultiVector(meta.kind)) changes
+      else changes.withColumn(meta.vecCol,
+        when(VectorIndex.validVector(meta), col(meta.vecCol))))
+
+  private def syncValid(spark: SparkSession, meta: IndexMeta,
       changes: DataFrame): Unit = meta.kind match {
     case Exact => ()
     case Ivf =>
@@ -427,10 +447,10 @@ object IndexKinds {
     * table, touched-dir-only via [[PartitionedLayout.mergeOverwrite]] —
     * bytes moved scale with the CHANGE SET's bucket dirs, never the
     * corpus (the dir collect is bounded by `corpusBuckets`, the
-    * layout's key space). Upserts pass the same validity predicate as
-    * [[VectorIndex.prepare]] (deletes, null/wrong-dim and zero-norm
-    * vectors all leave the corpus), so the side table never diverges
-    * from the exact artifact. A pre-bucketing corpus (or one stranded
+    * layout's key space). Deletes and null-vector upserts leave the
+    * corpus ([[sync]] has already nulled every vector the exact
+    * artifact rejects), so the side table never diverges from the
+    * exact artifact. A pre-bucketing corpus (or one stranded
     * in `__old` by a crashed legacy swap) is recovered/migrated once,
     * then synced touched-dir forever. */
   private def mergeCorpus(spark: SparkSession, path: String,
@@ -453,12 +473,9 @@ object IndexKinds {
       fs.delete(old, true)
     }
     val latest = ChangeLog.latestPerPk(changes, meta.pkCol)
-    val dimOk =
-      if (meta.dim > 0) size(col(meta.vecCol)) === meta.dim else lit(true)
     val upserts = latest.filter(col("__op") =!= ChangeLog.OpDelete)
       .drop("__op", "__seq")
-      .filter(col(meta.vecCol).isNotNull && dimOk &&
-        VF.norm(col(meta.vecCol)) > 0.0)
+      .filter(col(meta.vecCol).isNotNull)
     val changedPks = latest.select(col(meta.pkCol))
     val bkts = changedPks.withColumn("__cbkt", corpusBucketCol(meta))
       .select("__cbkt").distinct().collect().map(_.getInt(0)).toSeq

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.functions.{Metric, VectorFunctions => VF}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Engine-level vector index: the open-primitive equivalent of the
   * reference's delta-sync index (reference src/databricks/syntetic_data.py:
@@ -57,10 +57,8 @@ final class VectorIndex(val meta: IndexMeta) {
         .filter(size(col(meta.vecCol)) > 0)
         .withColumn("__norm", size(col(meta.vecCol)).cast("double"))
     } else {
-      source.filter(col(meta.vecCol).isNotNull &&
-          size(col(meta.vecCol)) === meta.dim)
+      source.filter(VectorIndex.validVector(meta))
         .withColumn("__norm", VF.norm(col(meta.vecCol)))
-        .filter(col("__norm") > 0.0)
         .withColumn(meta.vecCol, VF.normalize(col(meta.vecCol)))
     }
 
@@ -119,6 +117,18 @@ final class VectorIndex(val meta: IndexMeta) {
       count(lit(1)).as("rows"),
       countDistinct(col(meta.pkCol)).as("distinct_pks"),
       round(avg("__norm"), 4).as("avg_norm"))
+}
+
+object VectorIndex {
+  /** [[VectorIndex.prepare]]'s row rule for single-vector kinds: a
+    * non-null vector of `dim` elements with norm > 0. The kinded
+    * layouts build and sync under the same rule
+    * ([[IndexKinds.build]], [[IndexKinds.sync]]), so every layout holds
+    * exactly the exact artifact's rows. */
+  def validVector(meta: IndexMeta): Column = {
+    val v = col(meta.vecCol)
+    v.isNotNull && size(v) === meta.dim && VF.norm(v) > 0.0
+  }
 }
 
 /** Catalog of index metadata — create/get/drop with IF-NOT-EXISTS

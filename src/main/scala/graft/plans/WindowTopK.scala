@@ -40,8 +40,8 @@ case class WindowTopK(
   * but FULLY SORTS every map partition first and sorts again after the
   * exchange; this rewrite replaces both sorts with O(n log k) bounded
   * heaps whose memory is O(groups * k) rows — nothing to spill, and
-  * ~20% faster warm at 5M rows / 50k groups / k=3 on local[4]
-  * (tools.TopKBench). The rank attribute keeps its exprId, so
+  * ~20% faster warm at 5M rows / 50k groups / k=3 on local[4]. The
+  * rank attribute keeps its exprId, so
   * downstream references resolve unchanged.
   *
   * Strictly guarded: single row_number window expression, non-empty

@@ -419,8 +419,8 @@ object InfraQueries {
     // centroids (first 16 corpus vectors by id) — the assignment, probe
     // and refine are all pure functions of the corpus, so the DuckDB
     // oracle replays the ENTIRE pruned path stage by stage and
-    // hash-checks it. KMeans-centroid IVF (quality path) keeps its
-    // recall assertions in AnnSpec.
+    // hash-checks it. Trained-centroid IVF (buildIvfTrained, the
+    // quality path) keeps its recall assertions in AnnSpec.
     "ann_ivf_topk" -> ((s, dir) => {
       val e = emb(s, dir)
       val index = Ann.buildIvfDeterministic(e.filter(col("vec_id") >= 5),
@@ -587,7 +587,8 @@ object InfraQueries {
     // cell-join + refine machinery loses nothing when nothing is pruned.
     "ann_ivf_fullprobe" -> ((s, dir) => {
       val e = emb(s, dir)
-      val index = Ann.buildIvf(e.filter(col("vec_id") >= 5), "embedding", 16)
+      val index = Ann.buildIvfDeterministic(e.filter(col("vec_id") >= 5),
+        "embedding", "vec_id", 16)
       Ann.queryIvf(index, e.filter(col("vec_id") < 5), "vec_id", "embedding",
           "vec_id", "embedding", k = 3, nProbe = 16)
         .select(col("query_id"), col("rank").cast("long").as("rnk"),

@@ -1,14 +1,14 @@
 package graft.search
 
 import graft.functions.{Metric, VectorDistance, VectorFunctions => VF}
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, SQLOrderingUtil}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{IntegerType, MapType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -20,18 +20,20 @@ import scala.jdk.CollectionConverters._
   * a bucket id (SURVEY.md §4.3 — a logical rewrite done in library code,
   * where index metadata lives, not in a Catalyst rule):
   *
-  *  - IVF: KMeans centroids (fit once at build, seed pinned); corpus rows
-  *    carry their centroid id (ideally as a partition column). A query
-  *    probes its `nProbe` nearest centroids → equi-join on centroid id →
-  *    exact re-score (refine, mirroring the reference's commented
-  *    reranker hook QE:130) → top-k. Scan cost drops to nProbe/k of the
-  *    corpus.
+  *  - IVF: k centroids (the first k corpus vectors by id, or
+  *    deterministic sampled k-means, [[Kmeans]]) frozen at build; corpus
+  *    rows carry their nearest centroid's id (ideally as a partition
+  *    column). A query probes its `nProbe` nearest centroids →
+  *    equi-join on centroid id → exact re-score (refine, mirroring the
+  *    reference's commented reranker hook QE:130) → top-k. Scan cost
+  *    drops to nProbe/k of the corpus. [[Centroids]] owns the cell
+  *    decision for every build, sync and probe.
   *  - LSH: MLlib BucketedRandomProjectionLSH; candidates from
   *    approxSimilarityJoin, refined by exact distance.
   */
 object Ann {
 
-  // ---------------- IVF (KMeans centroid pruning) ----------------
+  // ---------------- IVF (centroid pruning) ----------------
 
   /** `splits` (cell → sub-cell count) is non-empty only for a
     * [[balanceCells]]-split index; it is what [[persistIvf]] writes
@@ -40,67 +42,37 @@ object Ann {
   final case class IvfIndex(corpusWithCell: DataFrame,
       centroids: DataFrame, splits: Map[Int, Int] = Map.empty)
 
-  /** Build: assign every corpus row its nearest-centroid id. `centroids`
-    * is tiny (k rows) — always broadcastable. */
-  def buildIvf(corpus: DataFrame, vecCol: String, k: Int,
-      seed: Long = 42L): IvfIndex = {
-    val withVec = corpus.filter(col(vecCol).isNotNull)
-      .withColumn("__mlvec", array_to_vector(col(vecCol)))
-    // random init + few iterations: centroids only place buckets, they
-    // don't need convergence; k-means|| init alone costs several passes.
-    // 3 iterations: each one is a full corpus pass, and bucket recall is
-    // governed by nProbe at query time, not centroid convergence.
-    val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("__mlvec")
-      .setPredictionCol("__cell").setInitMode("random").setMaxIter(3)
-      .fit(withVec)
-    val assigned = model.transform(withVec).drop("__mlvec")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("__cell", "__centroid")
-    IvfIndex(assigned, cents)
-  }
-
   /** Build with DETERMINISTIC centroids: the first `k` corpus vectors in
     * `idCol` order seed the cells (cell id = rank in that order). Where
-    * KMeans trades reproducibility for centroid quality, this build is a
-    * pure function of the corpus — the same assignment on any engine —
-    * which makes even the PRUNED query path (nProbe < k) expressible as
-    * plain SQL and hash-checkable by the DuckDB oracle. Recall is
-    * governed by nProbe exactly as with KMeans centroids.
+    * [[buildIvfTrained]] trains its centroids on a sample, this build
+    * takes them as they come — still a pure function of the corpus,
+    * the same assignment on any engine — which makes even the PRUNED
+    * query path (nProbe < k) expressible as plain SQL and
+    * hash-checkable by the DuckDB oracle. Recall is governed by nProbe
+    * exactly as with trained centroids.
     *
-    * Scale shape: centroid pick is a k-row limit (tiny); assignment is
-    * one broadcast cross-join (corpus × k) reduced by a map-side-partial
-    * min_by groupBy on the pk — one narrow shuffle of corpus-count rows,
-    * no iteration (vs KMeans' maxIter full passes). Ties on distance
-    * break by cell id ascending. */
+    * Scale shape: the centroid pick is a k-row limit collected once
+    * (tiny); assignment is one per-row [[Centroids.assign]] expression
+    * over the driver-held centroids — no join, no shuffle, no
+    * iteration. Ties on distance break by cell id ascending. */
   def buildIvfDeterministic(corpus: DataFrame, vecCol: String, idCol: String,
       k: Int): IvfIndex = {
     val valid = corpus.filter(col(vecCol).isNotNull)
-    val cents = valid.orderBy(col(idCol).asc).limit(k)
+    val cents = Centroids(valid.orderBy(col(idCol).asc).limit(k)
       .select(col(idCol).as("__cid"), col(vecCol).as("__centroid"))
       .withColumn("__cell",
-        (row_number().over(Window.orderBy(col("__cid").asc)) - 1).cast("int"))
-      .select(col("__cell"), col("__centroid"))
-    IvfIndex(assignCells(valid, vecCol, idCol, cents), cents)
+        (row_number().over(Window.orderBy(col("__cid").asc)) - 1).cast("int")))
+    IvfIndex(withCell(valid, vecCol, idCol, cents),
+      cents.frame(corpus.sparkSession))
   }
 
-  /** Nearest-centroid assignment shared by the deterministic and
-    * trained builds: one broadcast cross-join (corpus × k) reduced by a
-    * map-side-partial `min_by` groupBy on the pk — one narrow shuffle,
-    * no iteration. Ties on distance break by cell id ascending. */
-  private def assignCells(valid: DataFrame, vecCol: String, idCol: String,
-      cents: DataFrame): DataFrame = {
-    val carry = valid.columns.filter(_ != idCol)
-    valid.crossJoin(broadcast(cents))
-      .withColumn("__cdist", VF.l2(col(vecCol), col("__centroid")))
-      .groupBy(col(idCol))
-      .agg(
-        min_by(col("__cell"), struct(col("__cdist"), col("__cell")))
-          .as("__cell"),
-        carry.map(c => first(col(c)).as(c)): _*)
-  }
+  /** Rows with their nearest cell, in the layout's column order
+    * `(id, __cell, rest…)` — the one assignment the deterministic,
+    * trained and shard builds and [[syncPersistedIvf]] share. */
+  private def withCell(rows: DataFrame, vecCol: String, idCol: String,
+      cents: Centroids): DataFrame =
+    rows.select(col(idCol) +: cents.assign(col(vecCol)).as("__cell") +:
+      rows.columns.filter(_ != idCol).map(col).toSeq: _*)
 
   /** Build with TRAINED centroids: deterministic sampled k-means
     * ([[Kmeans]] — md5-ordered sample, fixed-iteration integer Lloyd)
@@ -122,7 +94,7 @@ object Ann {
     val cents = trained.zipWithIndex
       .map { case (c, i) => (i, c.map(y => (y.toDouble / Pq.Scale).toFloat)) }
       .toSeq.toDF("__cell", "__centroid")
-    IvfIndex(assignCells(valid, vecCol, idCol, cents), cents)
+    IvfIndex(withCell(valid, vecCol, idCol, Centroids(cents)), cents)
   }
 
   /** Batch query with centroid pruning + exact refine. One equi-join
@@ -132,25 +104,13 @@ object Ann {
       k: Int, nProbe: Int, metric: Metric = Metric.Cosine): DataFrame = {
     val q = queries.select(col(queryIdCol).as("query_id"),
       col(queryVecCol).as("__qvec"))
-    // probe: nProbe nearest centroids per query (queries × k centroids —
-    // both small; broadcast the centroids)
-    val probed = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"), col("__cell"))
+    // probe: one row per (query, probed cell) — queries-sized
+    val probed = Centroids(index.centroids).probeRows(q, "__qvec", nProbe)
     // candidates: equi-join on cell id, then exact score + top-k refine
     val cand = index.corpusWithCell.join(broadcast(probed), Seq("__cell"))
-    val scored = cand.withColumn("score",
-      VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(cand.withColumn("score",
+      VF.distance(col(corpusVecCol), col("__qvec"), metric)),
+      corpusPkCol, k, metric)
   }
 
   /** Per-cell occupancy — the observability a straggler guard needs.
@@ -254,8 +214,9 @@ object Ann {
       .orderBy("query_id")
   }
 
-  /** Straggler guard: KMeans (especially `initMode=random, maxIter=3`)
-    * can leave hot cells holding many× the mean — at 100 TB one hot
+  /** Straggler guard: frozen centroids (the first-k pick especially, on
+    * a skewed corpus) can leave hot cells holding many× the mean — at
+    * 100 TB one hot
     * cell is one task that runs for hours. Split every cell above
     * `maxSkew` × mean into equal-probability hash sub-cells
     * (`__subcell`). PURELY PHYSICAL: `queryIvf` still joins on
@@ -315,10 +276,15 @@ object Ann {
 
   final case class PersistedIvf(path: String)
 
-  /** A persisted layout's centroid table, held on the driver: the rows
-    * of `_centroids` with its schema, and each centroid as a literal for
-    * the driver-side probe. */
-  final class Centroids private[Ann] (schema: StructType, rows: Array[Row]) {
+  /** The coarse quantizer of every IVF-family index, held on the
+    * driver: the k rows of `(__cell, __centroid)`, each centroid also as
+    * a literal. The ONE owner of the cell decision: a vector's cells
+    * are the centroids in ascending (L2 distance, cell id) order — the
+    * same `VectorDistance(…, L2)` evaluation and Spark's double
+    * comparison in the driver form ([[probe]]) and the per-row column
+    * form ([[nearest]]). Build and sync assign with `n = 1`
+    * ([[assign]]); probes take `n = nProbe`. */
+  final class Centroids private (schema: StructType, rows: Array[Row]) {
     private val cells: Array[(Int, Literal)] = rows.map(r =>
       r.getInt(0) -> Literal.create(r.get(1), schema(1).dataType))
 
@@ -326,10 +292,7 @@ object Ann {
     def frame(spark: SparkSession): DataFrame =
       spark.createDataFrame(rows.toSeq.asJava, schema)
 
-    /** The `nProbe` cells nearest to `query`, in probe order — the
-      * batch probe's cell set: the same `VectorDistance(…, L2)`
-      * evaluation and the same `(distance, __cell)` ascending order
-      * under Spark's double comparison. */
+    /** The `nProbe` cells nearest to `query`, in probe order. */
     def probe(query: Seq[Float], nProbe: Int): Seq[Int] = {
       val q = Literal.create(query.toArray)
       cells.map { case (cell, c) =>
@@ -339,30 +302,83 @@ object Ann {
         byDist < 0 || (byDist == 0 && ca < cb)
       }.take(nProbe).map(_._2).toSeq
     }
+
+    /** The `n` cells nearest to `vec`, in probe order, as one per-row
+      * expression (`array<int>`): the k `(distance, cell)` structs
+      * sorted ascending — struct order is distance under Spark's double
+      * comparison, then cell id. Linear in k; no join, no shuffle. */
+    def nearest(vec: Column, n: Int): Column =
+      if (cells.isEmpty) typedLit(Seq.empty[Int])
+      else transform(
+        slice(sort_array(array(cells.toSeq.map { case (cell, c) =>
+          struct(VF.l2(vec, Bridge.column(c)).as("d"), lit(cell).as("c"))
+        }: _*)), 1, n),
+        _.getField("c"))
+
+    /** The nearest cell — build and sync assignment. */
+    def assign(vec: Column): Column = nearest(vec, 1).getItem(0)
+
+    /** `rows` with one row per (row, probed cell): `__cell` holds each
+      * of the `nProbe` cells nearest to `vecCol`. */
+    def probeRows(rows: DataFrame, vecCol: String, nProbe: Int): DataFrame =
+      rows.withColumn("__cell", explode(nearest(col(vecCol), nProbe)))
+
+    /** The centroid of `cell` — the residual encoders' `__centroid`. */
+    def centroid(cell: Column): Column = element_at(
+      Bridge.column(Literal(ArrayBasedMapData(cells.map(_._1),
+        cells.map(_._2.value)), MapType(IntegerType, schema(1).dataType))),
+      cell)
+  }
+
+  object Centroids {
+    /** Collect a `(__cell, __centroid)` table — k rows; a local
+      * relation (every build's centroids) collects without a job. */
+    def apply(table: DataFrame): Centroids = {
+      val t = table.select("__cell", "__centroid")
+      new Centroids(t.schema, t.collect())
+    }
   }
 
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       (Seq[(String, Long, Long)], Centroids)]()
 
-  /** The centroids of the layout at `path`, read once per `_centroids`
-    * directory listing. The cache key is every listed file's (name,
-    * length, mtime): a rebuild writes new part files, so it always
-    * misses, and each layout path keeps only its latest entry. A hit
-    * costs one directory listing and opens no file. */
-  def loadCentroids(spark: SparkSession, path: String): Centroids = {
-    val dir = new org.apache.hadoop.fs.Path(path + "_centroids")
-    val key = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir)
+  /** The centroids in the side-file directory `dir` (`path +
+    * "_centroids"` for the IVF and IVF-PQ layouts, `+ "_cents"` for
+    * PLAID), read once per directory listing. The cache key is every
+    * listed file's (name, length, mtime): a rebuild writes new part
+    * files, so it always misses, and each directory keeps only its
+    * latest entry. A hit costs one directory listing and opens no
+    * file. */
+  def loadCentroids(spark: SparkSession, dir: String): Centroids = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p)
       .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
       .sorted.toSeq
-    Option(centroidCache.get(path)).filter(_._1 == key).map(_._2)
+    Option(centroidCache.get(dir)).filter(_._1 == key).map(_._2)
       .getOrElse {
-        val t = spark.read.parquet(dir.toString)
-        val c = new Centroids(t.schema, t.collect())
-        centroidCache.put(path, key -> c)
+        val c = Centroids(spark.read.parquet(dir))
+        centroidCache.put(dir, key -> c)
         c
       }
+  }
+
+  /** The batch probe of a persisted layout, run ONCE: `q`'s rows (with
+    * its `__qvec`) exploded over their `nProbe` cells, `extra` columns
+    * (they may read `__cell`) added, and the result collected —
+    * queries × nProbe rows, driver-bounded by the batch. Returns the
+    * probed cells (the partition-pruning IN-list) and the collected
+    * rows as the refine's broadcast side, so the probe plan never
+    * executes twice. */
+  private[search] def collectProbe(spark: SparkSession, cents: Centroids,
+      q: DataFrame, nProbe: Int, extra: Column*): (Seq[Int], DataFrame) = {
+    val probed = cents.probeRows(q, "__qvec", nProbe)
+      .select(col("*") +: extra: _*)
+    val rows = probed.collect()
+    (rows.map(_.getAs[Int]("__cell")).distinct.toSeq,
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
+        probed.schema))
   }
 
   /** Query a persisted IVF index. The cell filter is a partition filter:
@@ -382,38 +398,17 @@ object Ann {
       corpusPkCol: String, corpusVecCol: String, k: Int, nProbe: Int,
       metric: Metric = Metric.Cosine,
       rowFilter: Option[Column] = None): DataFrame = {
-    val centroids = loadCentroids(spark, idx.path).frame(spark)
     val q = queries.select(col(queryIdCol).as("query_id"),
       col(queryVecCol).as("__qvec"))
-    val probed = q.crossJoin(broadcast(centroids))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"), col("__cell"))
-    // collect the probe table ONCE (queries × nProbe rows — driver-
-    // bounded by the batch): the cell IN-list for partition pruning
-    // AND the refine's broadcast side both come from the collected
-    // rows, instead of the probe plan (crossjoin + rank window)
-    // executing twice — once for the collect, once for the broadcast
-    val probedRows = probed.collect()
-    val cells = probedRows.map(_.getAs[Int]("__cell")).distinct.toSeq
-    val probedLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(probedRows.toSeq, 1),
-      probed.schema)
+    val (cells, probed) = collectProbe(spark,
+      loadCentroids(spark, idx.path + "_centroids"), q, nProbe)
     val pruned = spark.read.parquet(idx.path)
       .filter(col("__cell").isin(cells: _*))
     val corpus = rowFilter.map(pruned.filter).getOrElse(pruned)
-    val cand = corpus.join(broadcast(probedLocal), Seq("__cell"))
-    val scored = cand.withColumn("score",
-      VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    val cand = corpus.join(broadcast(probed), Seq("__cell"))
+    Knn.topKPerQuery(cand.withColumn("score",
+      VF.distance(col(corpusVecCol), col("__qvec"), metric)),
+      corpusPkCol, k, metric)
   }
 
   /** One query vector against a persisted IVF layout — the
@@ -430,7 +425,8 @@ object Ann {
       query: Seq[Float], columns: Seq[String], corpusPkCol: String,
       corpusVecCol: String, k: Int, nProbe: Int, metric: Metric,
       rowFilter: Option[Column]): DataFrame = {
-    val cells = loadCentroids(spark, idx.path).probe(query, nProbe)
+    val cells = loadCentroids(spark, idx.path + "_centroids")
+      .probe(query, nProbe)
     val pruned = spark.read.parquet(idx.path)
       .filter(col("__cell").isin(cells: _*))
     Knn.singleQuery(rowFilter.map(pruned.filter).getOrElse(pruned),
@@ -467,19 +463,12 @@ object Ann {
     val layout = spark.read.parquet(idx.path)
     val hasSub = layout.columns.contains("__subcell")
     val partCols = if (hasSub) Seq("__cell", "__subcell") else Seq("__cell")
-    val cents = loadCentroids(spark, idx.path).frame(spark)
     val latest = ChangeLog.latestPerPk(changes, pkCol)
     val upserts = latest.filter(col("__op") =!= ChangeLog.OpDelete)
       .drop("__op", "__seq")
       .filter(col(vecCol).isNotNull)
-    val carry = upserts.columns.filter(_ != pkCol)
-    val assignedCell = upserts.crossJoin(broadcast(cents))
-      .withColumn("__cdist", VF.l2(col(vecCol), col("__centroid")))
-      .groupBy(col(pkCol))
-      .agg(
-        min_by(col("__cell"), struct(col("__cdist"), col("__cell")))
-          .as("__cell"),
-        carry.map(c => first(col(c)).as(c)): _*)
+    val assignedCell = withCell(upserts, vecCol, pkCol,
+      loadCentroids(spark, idx.path + "_centroids"))
     val assigned =
       if (!hasSub) assignedCell
       else {
@@ -527,8 +516,8 @@ object Ann {
     * `merge_ondisk` shape). */
   def buildIvfShard(shard: DataFrame, vecCol: String, idCol: String,
       centroids: DataFrame): IvfIndex =
-    IvfIndex(assignCells(shard.filter(col(vecCol).isNotNull), vecCol,
-      idCol, centroids), centroids)
+    IvfIndex(withCell(shard.filter(col(vecCol).isNotNull), vecCol, idCol,
+      Centroids(centroids)), centroids)
 
   /** Merge N shard layouts (each from [[persistIvf]] of a
     * [[buildIvfShard]] index) into one queryable layout at `destPath` —
@@ -644,12 +633,7 @@ object Ann {
       .dropDuplicates("query_id", corpusPkCol)
     val scored = cand.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   /** Handle to an index persisted by [[persistSignLsh]]. */
@@ -837,12 +821,7 @@ object Ann {
       .dropDuplicates("query_id", corpusPkCol)
     val scored = cand.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   /** Embedding near-duplicates of a batch AGAINST a persisted sign-LSH
@@ -928,12 +907,7 @@ object Ann {
       .dropDuplicates("query_id", corpusPkCol)
     val scored = cand.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   // ---------------- LSH (random projection buckets) ----------------

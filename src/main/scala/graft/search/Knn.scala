@@ -28,6 +28,19 @@ object Knn {
     case _         => scoreCol.desc
   }
 
+  /** The refine tail every batch leg ends with: rank each query's scored
+    * candidates by ([[scoreOrder]], pk), keep the top `k`, and return
+    * `(query_id, rank, <pk>, score)` ordered by query and rank. */
+  def topKPerQuery(scored: DataFrame, pkCol: String, k: Int,
+      metric: Metric): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(scoreOrder(col("score"), metric), col(pkCol).asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col(pkCol), col("score"))
+      .orderBy(col("query_id").asc, col("rank").asc)
+  }
+
   /** Single-query top-k: corpus rows scored against one literal vector.
     * Returns `(rank, <corpus cols...>, score)`.
     */

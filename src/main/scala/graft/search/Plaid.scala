@@ -1,9 +1,8 @@
 package graft.search
 
-import graft.functions.{VectorFunctions => VF}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Centroid-routed late-interaction retrieval — the PLAID form of
   * MaxSim (Santhanam et al., "PLAID: An Efficient Engine for Late
@@ -93,20 +92,15 @@ object Plaid {
     * cell's centroid (the same-cell ADC convention of
     * [[Pq.rerankOverIvfResidual]]). Request-sized by contract. */
   private def probes(queryTokens: DataFrame, queryIdCol: String,
-      queryTokIdxCol: String, queryVecCol: String, centroids: DataFrame,
+      queryTokIdxCol: String, queryVecCol: String, cents: Ann.Centroids,
       nProbe: Int): DataFrame = {
     val qt = queryTokens.filter(col(queryVecCol).isNotNull)
       .select(col(queryIdCol).as("query_id"),
         col(queryTokIdxCol).as("__ti"),
         transform(col(queryVecCol), _.cast("double")).as("__qv"))
-    qt.crossJoin(broadcast(centroids))
-      .withColumn("__cdist", VF.l2(col("__qv"), col("__centroid")))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy("query_id", "__ti")
-          .orderBy(col("__cdist").asc, col("__cell").asc)))
-      .filter(col("__pr") <= nProbe)
-      .select(col("query_id"), col("__ti"), col("__qv"), col("__cell"),
-        Pq.residualInt(col("__qv"), col("__centroid")).as("__qres"))
+    cents.probeRows(qt, "__qv", nProbe)
+      .withColumn("__qres",
+        Pq.residualInt(col("__qv"), cents.centroid(col("__cell"))))
   }
 
   /** Stage 2 — ADC over (probed cell ∩ token) pairs: docs rank by
@@ -160,7 +154,7 @@ object Plaid {
       queryIdCol: String, queryTokIdxCol: String, queryVecCol: String,
       k: Int): DataFrame = {
     val pb = probes(queryTokens, queryIdCol, queryTokIdxCol, queryVecCol,
-      idx.centroids, idx.params.nProbe)
+      Ann.Centroids(idx.centroids), idx.params.nProbe)
     val cand = candidates(idx.coded, pb, idx.cb, k, idx.params.c)
     val dtFull = idx.coded.select(col("__did"),
       transform(col("__tvf"), _.cast("double")).as("__dv"))
@@ -242,24 +236,6 @@ object Plaid {
       Array.tabulate(m, kEntries)((s, j) => byKey((s, j))))
   }
 
-  /** Nearest frozen centroid as ONE linear-size expression — the
-    * row-level form of the build's crossJoin + `min_by` assignment
-    * (same distances, same tie-to-lowest-cell rule): the distance
-    * ARRAY is built in ascending cell order, so `array_position` of
-    * its minimum returns the lowest tying cell. (A when-chain fold
-    * would reference its accumulator twice per level — an expression
-    * tree EXPONENTIAL in the cell count; measured 80× on the sync
-    * path before this form.) `cents` is driver-small by contract. */
-  private def nearestCell(vec: Column,
-      cents: Seq[(Int, Seq[Float])]): Column = {
-    val ordered = cents.sortBy(_._1)
-    val dists = array(ordered.map { case (_, cv) =>
-      VF.l2(vec, typedLit(cv)) }: _*)
-    val cellIds = typedLit(ordered.map(_._1))
-    element_at(cellIds,
-      array_position(dists, array_min(dists)).cast("int"))
-  }
-
   /** CDF-batch maintenance of a [[persist]] layout — the PLAID leg's
     * `syncPersistedTokens`, under the frozen-quantizer contract
     * (build-time centroids and codebooks re-encode the delta; adding
@@ -277,9 +253,7 @@ object Plaid {
     import graft.index.{ChangeLog, PartitionedLayout}
     val (docBuckets, _, _) = loadMeta(spark, idx.path)
     val cb = loadCodebooks(spark, idx.path)
-    val centsDf = spark.read.parquet(idx.path + "_cents")
-    val cents: Seq[(Int, Seq[Float])] = centsDf.collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toSeq)).toSeq
+    val cents = Ann.loadCentroids(spark, idx.path + "_cents")
     val latest = ChangeLog.latestPerPk(changes, pkCol)
       .localCheckpoint(true)
     val changedPks = latest.select(col(pkCol).as("__did"))
@@ -289,11 +263,11 @@ object Plaid {
       .filter(col("__tv").isNotNull)
       .select(col("__did"),
         transform(col("__tv"), _.cast("float")).as("__tvf"))
-      .withColumn("__cell", nearestCell(col("__tvf"), cents))
+      .withColumn("__cell", cents.assign(col("__tvf")))
       .localCheckpoint(true) // affected collect + both merges
-    val newCoded = newToks.join(broadcast(centsDf), Seq("__cell"))
-      .withColumn("__codes",
-        Pq.encode(Pq.residualInt(col("__tvf"), col("__centroid")), cb))
+    val newCoded = newToks
+      .withColumn("__codes", Pq.encode(Pq.residualInt(col("__tvf"),
+        cents.centroid(col("__cell"))), cb))
       .select("__did", "__codes", "__cell")
     val newDocs = newToks
       .withColumn("__dbkt",
@@ -307,7 +281,7 @@ object Plaid {
     val affected: Seq[Seq[Any]] = spark.read.parquet(idx.path + "_docs")
       .filter(col("__dbkt").isin(dbks: _*))
       .join(changedPks, Seq("__did"), "left_semi")
-      .select(nearestCell(col("__tvf"), cents).as("__cell"))
+      .select(cents.assign(col("__tvf")).as("__cell"))
       .union(newToks.select("__cell")).distinct()
       .collect().map(r => Seq[Any](r.getInt(0)))
     // phase 1: ADDITIVE _docs append (crash ⇒ superset, safe)
@@ -334,10 +308,10 @@ object Plaid {
       queryTokens: DataFrame, queryIdCol: String, queryTokIdxCol: String,
       queryVecCol: String, k: Int): DataFrame = {
     val (docBuckets, nProbe, c) = loadMeta(spark, idx.path)
-    val cents = spark.read.parquet(idx.path + "_cents")
     val cb = loadCodebooks(spark, idx.path)
     val pb = probes(queryTokens, queryIdCol, queryTokIdxCol, queryVecCol,
-      cents, nProbe).localCheckpoint(true) // cells collect + 2 joins
+      Ann.loadCentroids(spark, idx.path + "_cents"), nProbe)
+      .localCheckpoint(true) // cells collect + 2 joins
     val probedCells = pb.select("__cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     val coded = spark.read.parquet(idx.path)

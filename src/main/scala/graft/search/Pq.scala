@@ -192,13 +192,8 @@ object Pq {
       .select(col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec"),
         intQuant(col(queryVecCol)).as("__qint"))
-    val probed = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"), col("__qint"), col("__cell"))
+    val probed = Ann.Centroids(index.centroids)
+      .probeRows(q, "__qvec", nProbe)
     val coded = index.corpusWithCell
       .filter(col(corpusVecCol).isNotNull)
       .withColumn("__codes", encode(col(corpusVecCol), cb))
@@ -210,12 +205,7 @@ object Pq {
       .filter(col("__crk") <= k * c)
     val scored = coarse.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   /** RESIDUAL IVF-PQ — [[rerankOverIvf]] with the fine quantizer
@@ -234,21 +224,14 @@ object Pq {
     val q = queries.filter(col(queryVecCol).isNotNull)
       .select(col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec"))
-    val probed = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"),
-        residualInt(col("__qvec"), col("__centroid")).as("__qint"),
-        col("__cell"))
+    val cents = Ann.Centroids(index.centroids)
+    val probed = cents.probeRows(q, "__qvec", nProbe)
+      .withColumn("__qint",
+        residualInt(col("__qvec"), cents.centroid(col("__cell"))))
     val coded = index.corpusWithCell
       .filter(col(corpusVecCol).isNotNull)
-      .join(broadcast(index.centroids), Seq("__cell"))
-      .withColumn("__codes",
-        encode(residualInt(col(corpusVecCol), col("__centroid")), cb))
-      .drop("__centroid")
+      .withColumn("__codes", encode(residualInt(col(corpusVecCol),
+        cents.centroid(col("__cell"))), cb))
     val coarse = coded.join(broadcast(probed), Seq("__cell"))
       .withColumn("__adc", adc(col("__codes"), col("__qint"), cb))
       .withColumn("__crk", row_number().over(
@@ -257,12 +240,7 @@ object Pq {
       .filter(col("__crk") <= k * c)
     val scored = coarse.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   // ------- persisted cell-partitioned layout (FAISS IVFPQ on disk) -------
@@ -413,7 +391,7 @@ object Pq {
       nProbe: Int, metric: Metric = Metric.Cosine,
       rowFilter: Option[Column] = None): DataFrame = {
     val (cb, residual) = loadCodebooksWithMarker(spark, idx.path)
-    val cents = spark.read.parquet(idx.path + "_centroids")
+    val cents = Ann.loadCentroids(spark, idx.path + "_centroids")
     val q = queries.filter(col(queryVecCol).isNotNull)
       .select(col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec"))
@@ -422,24 +400,10 @@ object Pq {
     // IVFPQ probe arithmetic); a raw layout quantizes q once — the
     // per-probed-row intQuant below is nProbe-bounded either way
     val qint =
-      if (residual) residualInt(col("__qvec"), col("__centroid"))
+      if (residual) residualInt(col("__qvec"), cents.centroid(col("__cell")))
       else intQuant(col("__qvec"))
-    val probed = q.crossJoin(broadcast(cents))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"), qint.as("__qint"),
-        col("__cell"))
-    // one probe execution feeds both consumers (the Ann.queryPersistedIvf
-    // discipline): cells IN-list from the collected rows, broadcast side
-    // from a local re-parallelize — never the probe plan twice
-    val probedRows = probed.collect()
-    val cells = probedRows.map(_.getAs[Int]("__cell")).distinct.toSeq
-    val probedLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(probedRows.toSeq, 1),
-      probed.schema)
+    val (cells, probedLocal) =
+      Ann.collectProbe(spark, cents, q, nProbe, qint.as("__qint"))
     val prunedScan = spark.read.parquet(idx.path)
       .filter(col("__cell").isin(cells: _*))
     val codes = rowFilter.map(prunedScan.filter).getOrElse(prunedScan)
@@ -458,12 +422,7 @@ object Pq {
     val scored = full.join(broadcast(coarse), Seq("__cell", corpusPkCol))
       .withColumn("score",
         VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 
   /** CDF maintenance of a [[persistIvfPq]] layout: centroids AND
@@ -480,28 +439,15 @@ object Pq {
       if (!residualLayout)
         changes.withColumn("__codes", encode(col(vecCol), cb))
       else {
-        // residual layout: a change row's code depends on its CELL,
-        // so assign it here with the persisted centroids — the same
-        // deterministic (distance, cell) argmin syncPersistedIvf
-        // performs downstream, so the two assignments agree — then
-        // encode x − centroid. Delete/null-vector rows pass through
-        // with null codes (they never reach the layout).
-        val cents = spark.read.parquet(idx.path + "_centroids")
-        val w = Window.partitionBy(col(pkCol), col("__seq"))
-          .orderBy(col("__cdist").asc, col("__cell").asc)
-        val encoded = changes.filter(col(vecCol).isNotNull)
-          .crossJoin(broadcast(cents))
-          .withColumn("__cdist", VF.l2(col(vecCol), col("__centroid")))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .withColumn("__codes",
-            encode(residualInt(col(vecCol), col("__centroid")), cb))
-          .drop("__cdist", "__rn", "__centroid", "__cell")
-        changes.filter(col(vecCol).isNull)
-          .withColumn("__codes",
-            lit(null).cast(org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.IntegerType, false)))
-          .unionByName(encoded)
+        // residual layout: a change row's code depends on its CELL, so
+        // assign it here with the persisted centroids — the same
+        // Centroids.assign syncPersistedIvf performs downstream, so the
+        // two assignments agree — then encode x − centroid. A
+        // delete/null-vector row encodes to null (it never reaches the
+        // layout).
+        val cents = Ann.loadCentroids(spark, idx.path + "_centroids")
+        changes.withColumn("__codes", encode(residualInt(col(vecCol),
+          cents.centroid(cents.assign(col(vecCol)))), cb))
       }
     Ann.syncPersistedIvf(spark, Ann.PersistedIvf(idx.path),
       withCodes, pkCol, vecCol)
@@ -528,12 +474,7 @@ object Pq {
       .filter(col("__cr") <= k * c)
     val scored = coarse.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(scored, corpusPkCol, k, metric)
   }
 }
 

@@ -59,12 +59,7 @@ object Rerank {
       .filter(col("__cr") <= k * c)
     val rescored = candidates.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w2 = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    rescored.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(rescored, corpusPkCol, k, metric)
   }
 
   /** The documented 100 TB composition, realized: stage 1's full-corpus
@@ -85,13 +80,8 @@ object Rerank {
     val q = queries.filter(col(queryVecCol).isNotNull)
       .select(col(queryIdCol).as("query_id"),
         col(queryVecCol).as("__qvec"))
-    val probed = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__cdist", VF.l2(col("__qvec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__cdist").asc,
-          col("__cell").asc)))
-      .filter(col("__cr") <= nProbe)
-      .select(col("query_id"), col("__qvec"), col("__cell"))
+    val probed = Ann.Centroids(index.centroids)
+      .probeRows(q, "__qvec", nProbe)
     val cand = index.corpusWithCell
       .filter(col(corpusVecCol).isNotNull)
       .join(broadcast(probed), Seq("__cell"))
@@ -105,12 +95,7 @@ object Rerank {
       .filter(col("__crk") <= k * c)
     val rescored = keep.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w2 = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    rescored.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(rescored, corpusPkCol, k, metric)
   }
 
   /** Maximal Marginal Relevance diversification (Carbonell & Goldstein,

@@ -157,12 +157,7 @@ object Sq8 {
       .filter(col("__cr") <= k * c)
     val rescored = cand.withColumn("score",
       VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w2 = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    rescored.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(rescored, corpusPkCol, k, metric)
   }
 
   // ------------- persisted two-file layout (codes | vectors) -------------
@@ -317,11 +312,6 @@ object Sq8 {
     val rescored = cand.join(full, Seq(corpusPkCol))
       .withColumn("score",
         VF.distance(col(corpusVecCol), col("__qvec"), metric))
-    val w2 = Window.partitionBy("query_id")
-      .orderBy(Knn.scoreOrder(col("score"), metric), col(corpusPkCol).asc)
-    rescored.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col(corpusPkCol), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    Knn.topKPerQuery(rescored, corpusPkCol, k, metric)
   }
 }

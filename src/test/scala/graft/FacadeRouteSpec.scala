@@ -338,7 +338,7 @@ class FacadeRouteSpec extends SparkSpec {
       "embedding", 64, "ivf", Map("cells" -> "16", "nProbe" -> "4"))
     assert(IndexKinds.layoutPath(again.meta) === path)
     assert(onDisk() !== before, "the rebuild must train other centroids")
-    val cached = Ann.loadCentroids(spark, path)
+    val cached = Ann.loadCentroids(spark, path + "_centroids")
       .frame(spark).orderBy("__cell").as[(Int, Seq[Float])].collect().toSeq
     assert(cached === onDisk(), "the loader must serve the new centroids")
     assertSameAsJoinedBack(again, qvs, 5)
@@ -472,6 +472,51 @@ class FacadeRouteSpec extends SparkSpec {
     val after = idx.similaritySearch(Seq("vec_id"), qv0, 1)
       .as[(Long, Double)].collect().head
     assert(after._1 !== 0L, s"deleted row resurfaced: $after")
+  }
+
+  test("ivf and signlsh layouts hold exactly the exact artifact's rows: " +
+      "zero and wrong-dim vectors are rejected at build and sync") {
+    import graft.index.ChangeLog
+    val zero = array_repeat(lit(0f), 64)
+    // pk 7 carries an all-zero vector at build
+    val source = corpus.withColumn("embedding",
+      when($"vec_id" === 7, zero).otherwise($"embedding"))
+    Seq("ivf" -> Map("cells" -> "16", "nProbe" -> "4"),
+        "signlsh" -> Map("tables" -> "4", "bits" -> "3")).foreach {
+      case (kind, opts) =>
+        val root = java.nio.file.Files
+          .createTempDirectory(s"graft_facade_valid_$kind").toString
+        val vs = new VectorSearch(spark, root)
+        vs.createEndpoint("ep")
+        val idx = vs.createDeltaSyncIndex("ep", source, s"valid_$kind",
+          "vec_id", "embedding", 64, kind, opts)
+        def pks(df: org.apache.spark.sql.DataFrame): Set[Long] =
+          df.select("vec_id").as[Long].collect().toSet
+        def assertSame(at: String): Unit = {
+          val exact = pks(spark.read.parquet(idx.meta.path))
+          val layout = pks(IndexKinds.corpusTable(spark, idx.meta))
+          assert(layout === exact, s"$kind layout pks differ from the " +
+            s"exact artifact's $at: only in the layout " +
+            s"${(layout -- exact).toSeq.sorted}, only in the artifact " +
+            s"${(exact -- layout).toSeq.sorted}")
+        }
+        assertSame("after build")
+        assert(!pks(spark.read.parquet(idx.meta.path)).contains(7L))
+        // one batch: a zero-vector update, a 3-dim update, a delete
+        val changes = source.filter($"vec_id".isin(20, 21, 22))
+          .withColumn("embedding",
+            when($"vec_id" === 20, zero)
+              .when($"vec_id" === 21, array(lit(1f), lit(2f), lit(3f)))
+              .otherwise($"embedding"))
+          .withColumn("__op", when($"vec_id" === 22, lit(ChangeLog.OpDelete))
+            .otherwise(lit(ChangeLog.OpUpdate)))
+          .withColumn("__seq", lit(1L))
+        idx.sync(changes)
+        assertSame("after sync")
+        val left = pks(spark.read.parquet(idx.meta.path))
+        assert(Seq(20L, 21L, 22L).forall(pk => !left.contains(pk)),
+          s"$kind: the exact artifact must drop all three changed pks")
+    }
   }
 
   test("graph corpus sync is touched-dir-only: untouched pk-hash " +

@@ -14,7 +14,7 @@ class PersistedIvfSpec extends SparkSpec {
 
   test("persisted IVF probe prunes partitions at the scan") {
     val path = Files.createTempDirectory("graft_pivf").toString + "/idx"
-    val built = Ann.buildIvf(corpus, "embedding", k = 8)
+    val built = Ann.buildIvfDeterministic(corpus, "embedding", "vec_id", 8)
     Ann.persistIvf(built, path)
     // cell dirs exist on disk
     val dirs = new java.io.File(path).listFiles()

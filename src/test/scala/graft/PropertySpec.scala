@@ -48,6 +48,54 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  // centroids and points on a small integer grid (half-integer
+  // midpoints): every distance is exact in double arithmetic, so planted
+  // ties are exact ties and the brute-force order is the true order
+  private val tiedCentroids = for {
+    d <- Gen.choose(1, 4)
+    k <- Gen.choose(1, 8)
+    grid = Gen.choose(-3, 3).map(_.toFloat)
+    base <- Gen.listOfN(k, Gen.listOfN(d, grid))
+    dupOf <- Gen.listOfN(k, Gen.option(Gen.choose(0, k - 1)))
+    idKeys <- Gen.listOfN(k, Gen.choose(0, 1000))
+    rowKeys <- Gen.listOfN(k, Gen.choose(0, 1000))
+    free <- Gen.listOfN(6, Gen.listOfN(d, grid))
+    mids <- Gen.listOfN(4, Gen.zip(Gen.choose(0, k - 1), Gen.choose(0, k - 1)))
+  } yield {
+    // planted duplicates: a centroid may repeat an earlier one's vector
+    val vecs = base.indices.map(i =>
+      dupOf(i).filter(_ < i).map(base(_)).getOrElse(base(i)))
+    // cell ids a random permutation, rows in another random order
+    val ids = (0 until k).sortBy(idKeys)
+    val cents = (0 until k).sortBy(rowKeys).map(i => (ids(i), vecs(i)))
+    // equidistant points: midpoints of centroid pairs, and the
+    // centroids themselves (distance 0 to every duplicate)
+    val points = free ++ vecs ++ mids.map { case (i, j) =>
+      vecs(i).zip(vecs(j)).map { case (a, b) => (a + b) / 2 } }
+    (cents, points)
+  }
+
+  test("property: Centroids.nearest equals Centroids.probe and a " +
+      "brute-force (l2, cell) sort under planted ties") {
+    import graft.search.Ann
+    check("nearest", Prop.forAll(tiedCentroids) { case (cents, points) =>
+      val c = Ann.Centroids(cents.toDF("__cell", "__centroid"))
+      val k = cents.size
+      Seq(1, k).forall { n =>
+        val got = points.map(Tuple1(_)).toDF("v")
+          .select(c.nearest(col("v"), n), c.assign(col("v"))).collect()
+        points.zip(got).forall { case (p, r) =>
+          val brute = cents.map { case (cell, v) =>
+            (math.sqrt(p.zip(v).map { case (a, b) =>
+              val x = a.toDouble - b; x * x }.sum), cell)
+          }.sortBy(identity).take(n).map(_._2)
+          r.getSeq[Int](0) == brute && r.getInt(1) == brute.head &&
+            c.probe(p, n) == brute
+        }
+      }
+    }, n = 30)
+  }
+
   private val topkData = for {
     nGroups <- Gen.choose(1, 6)
     n <- Gen.choose(1, 120)

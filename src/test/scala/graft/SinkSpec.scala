@@ -59,7 +59,8 @@ class SinkSpec extends SparkSpec {
     import graft.operators.Maintenance
     import graft.search.Ann
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val idx = Ann.buildIvf(emb.filter(col("vec_id") >= 5), "embedding", 8)
+    val idx = Ann.buildIvfDeterministic(emb.filter(col("vec_id") >= 5),
+      "embedding", "vec_id", 8)
     val dir = Files.createTempDirectory("graft_compact_part").toString + "/ivf"
     Ann.persistIvf(idx, dir)
     val before = spark.read.parquet(dir).collect().map(_.toString).sorted
